@@ -52,29 +52,18 @@ object ZipfCorpus {
       .select("doc_id", "text")
   }
 
-  /** The generated corpus, materialized once per fixture dir to a
-    * tmp-parquet cache (same pattern and rationale as the IVF model
-    * store, `CorpusQueries.ivfModel`): [[apply]]'s text is COMPUTED, so
-    * every downstream re-scan would replay the 65-term generator chain —
-    * the AllPairs pipeline alone reads its input five times (ranks,
-    * hot-bucket census, both prefix sides, verify join-back), which made
-    * regeneration ~4/5ths of `doc_jaccard_pairs_zipf`'s runtime. A real
-    * pipeline generates a synthetic corpus TO A TABLE once and scans it
-    * like any other input; this reproduces that shape. Keyed on the
-    * fixture file's (size, mtime) so regenerated fixtures re-materialize;
-    * `_SUCCESS` gates against a torn previous write.
+  /** The generated corpus as a [[graft.ops.Materialize]] store:
+    * [[apply]]'s text is COMPUTED, so every downstream re-scan would
+    * replay the 65-term generator chain — the AllPairs pipeline alone
+    * reads its input five times (ranks, hot-bucket census, both prefix
+    * sides, verify join-back), which made regeneration ~4/5ths of
+    * `doc_jaccard_pairs_zipf`'s runtime. A real pipeline generates a
+    * synthetic corpus TO A TABLE once and scans it like any other input;
+    * this reproduces that shape.
     */
-  def materialized(s: SparkSession, dir: String): DataFrame = {
-    val (fLen, fMtime) = graft.ops.Materialize.inputStamp(s, s"$dir/documents.parquet")
-    val tag = s"$dir|$fLen|$fMtime"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_zipf_corpus"), key)
-    if (!new java.io.File(path, "_SUCCESS").exists())
-      apply(s, dir).write.mode("overwrite").parquet(path.getAbsolutePath)
-    s.read.parquet(path.getAbsolutePath)
-  }
+  def materialized(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Materialize.cached(s, "zipf_corpus", Seq(s"$dir/documents.parquet"))(
+      apply(s, dir))
 
   /** DuckDB side: one SELECT producing the identical (doc_id, text). */
   val sql: String = {

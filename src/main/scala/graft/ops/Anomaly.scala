@@ -47,6 +47,8 @@ object Anomaly {
                   valueCol: String, lookback: Int = 30, minBaseline: Int = 10,
                   k: Int = 3): DataFrame = {
     require(lookback >= minBaseline && minBaseline >= 2 && k >= 1)
+    require(!counts.columns.exists(_.equalsIgnoreCase("__v2")),
+      "zScoreFlags input must not have a `__v2` column (its scratch column)")
     val w = Window.partitionBy(keyCol).orderBy(timeCol).rowsBetween(-lookback, -1)
     def dec(c: Column): Column = c.cast(DecimalType(38, 0))
     counts

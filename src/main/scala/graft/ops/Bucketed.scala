@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucketed-table layout: pre-hash-partition a table on its join key at
@@ -29,40 +27,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Bucketed tables live in the session catalog (the bucket spec is
   * catalog metadata, not parquet metadata), with data under an external
-  * path in java.io.tmpdir — fixture dirs are read-only. Within one JVM the
-  * write happens once per (dir, table); reruns reuse the catalog entry.
+  * path keyed by [[Materialize.pathFor]]. Within one JVM the write
+  * happens once per store key; reruns reuse the catalog entry.
   */
 object Bucketed {
 
-  private val lock = new Object
-
-  /** Session-unique table name for (sfDir, table) — bench/verify sessions
-    * open multiple sf dirs, and test sessions open synthetic ones.
+  /** Ensure a bucketed copy of `df`, derived from the `inputs` files, is
+    * registered as a catalog table; returns the table name. Bucket count
+    * is a WRITE-TIME contract: both sides of a co-located join must use
+    * the same `nBuckets` (and at scale it is sized so one bucket of the
+    * big table fits an executor — e.g. 4096 buckets for a 100 TB fact
+    * table ≈ 25 GB/bucket).
     */
-  private def tableName(dir: String, table: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$table".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"graft_bucketed_${table}_$key"
-  }
-
-  /** Ensure a bucketed copy of `df` is registered as a catalog table;
-    * returns the table name. Bucket count is a WRITE-TIME contract: both
-    * sides of a co-located join must use the same `nBuckets` (and at
-    * scale it is sized so one bucket of the big table fits an executor —
-    * e.g. 4096 buckets for a 100 TB fact table ≈ 25 GB/bucket).
-    */
-  def ensure(spark: SparkSession, dir: String, table: String,
-             bucketCol: String, nBuckets: Int)
-            (df: => DataFrame): String = lock.synchronized {
-    val name = tableName(dir, table)
+  def ensure(spark: SparkSession, table: String, bucketCol: String,
+             nBuckets: Int, inputs: Seq[String])
+            (df: => DataFrame): String = Materialize.lock.synchronized {
+    val path = Materialize.pathFor(spark,
+      s"bucketed|$table|$bucketCol|$nBuckets", inputs)
+    val name = s"graft_bucketed_${table}_${path.getName.take(12)}"
     if (!spark.catalog.tableExists(name)) {
-      val path = new File(
-        new File(sys.props("java.io.tmpdir"), "graft_bucketed"),
-        name + "_" + Materialize.codeFingerprint.take(8))
-      // A half-written path from a killed run would fail the CREATE;
-      // overwrite mode below replaces it atomically enough for a local
-      // store (the catalog entry is only published after the write).
       // Pre-partition on the bucket expression (same Murmur3 hash the
       // bucketing layer uses) so each bucket lands in exactly ONE file —
       // the layout under which Spark can also trust per-bucket sort
@@ -86,10 +69,10 @@ object Bucketed {
     */
   def ordersLineitem(spark: SparkSession, dir: String,
                      nBuckets: Int = 8): (String, String) = {
-    val o = ensure(spark, dir, "orders", "o_orderkey", nBuckets)(
-      graft.source.Tables(spark, dir, "orders"))
-    val l = ensure(spark, dir, "lineitem", "l_orderkey", nBuckets)(
-      graft.source.Tables(spark, dir, "lineitem"))
+    val o = ensure(spark, "orders", "o_orderkey", nBuckets,
+      Seq(s"$dir/orders.parquet"))(graft.source.Tables(spark, dir, "orders"))
+    val l = ensure(spark, "lineitem", "l_orderkey", nBuckets,
+      Seq(s"$dir/lineitem.parquet"))(graft.source.Tables(spark, dir, "lineitem"))
     (o, l)
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * (⌈bytes/target⌉, floor 1), the rewrite is one round-robin
   * repartition (no shuffle key — pure bin-packing; composing with
   * [[Layout]]'s z-order/Hilbert sort is the clustered variant), and the
-  * new snapshot lands via the same staging + ATOMIC_MOVE publish as
-  * [[DatePartitioned]] so readers never observe a half-written table.
+  * new snapshot lands via [[Materialize.publish]] so readers never
+  * observe a half-written table.
   *
   * The row-identity contract — compaction changes LAYOUT, never content
   * — is what the registered query proves: `ev_compacted_revenue` runs an
@@ -32,15 +32,13 @@ object Compact {
   final case class CompactStats(filesBefore: Int, bytesBefore: Long,
                                 filesAfter: Int, bytesAfter: Long)
 
-  private val lock = new Object
-
   private def dataFiles(dir: File): Seq[File] =
     Option(dir.listFiles()).getOrElse(Array.empty[File])
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
 
   /** Rewrite the parquet directory at `in` into `out` with ~targetBytes
     * files. Returns the before/after accounting. `out` must not exist;
-    * the write goes through a staging dir + atomic move.
+    * the write is staged and published by [[Materialize.publish]].
     */
   def compact(spark: SparkSession, in: String, out: File,
               targetBytes: Long): CompactStats = {
@@ -52,65 +50,29 @@ object Compact {
       java.lang.ProcessHandle.current().pid())
     spark.read.parquet(in).repartition(n)
       .write.mode("overwrite").parquet(staging.getAbsolutePath)
-    publishAtomically(staging, out)
+    Materialize.publish(staging, out)
     val after = dataFiles(out)
     CompactStats(before.size, bytesBefore, after.size, after.map(_.length).sum)
   }
 
-  /** Atomic-move publish of a staged directory. Exactly ONE failure mode
-    * is survivable — losing the publish race to another process, in
-    * which case the winner's copy is served and ours is discarded. Any
-    * other move failure (AtomicMoveNotSupportedException when tmpdir
-    * straddles filesystems, DirectoryNotEmptyException, permissions)
-    * rethrows: swallowing it returned a path that did not exist and
-    * surfaced later as a misleading read error (ADVICE r7).
-    */
-  private def publishAtomically(staging: File, out: File): Unit =
-    try java.nio.file.Files.move(staging.toPath, out.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: java.nio.file.FileSystemException =>
-        if (out.exists()) {
-          // lost a cross-process race: discard ours, serve the winner
-          org.apache.commons.io.FileUtils.deleteQuietly(staging)
-        } else {
-          org.apache.commons.io.FileUtils.deleteQuietly(staging)
-          throw e
-        }
-    }
-
-  /** Fragment-then-compact copy of the events table, built once per JVM
-    * under java.io.tmpdir (fixture dirs are read-only): the events rows
-    * (second-truncated ts — the registry determinism contract) are first
-    * written as `fragFiles` small files — the streaming-sink shape — and
-    * then compacted to ~`targetBytes` files. Returns the compacted path.
+  /** Fragment-then-compact copy of the events table, two [[Materialize]]
+    * stores: the events rows (second-truncated ts — the registry
+    * determinism contract) are first written as `fragFiles` small files —
+    * the streaming-sink shape — and then compacted to ~`targetBytes`
+    * files. Returns the compacted path.
     */
   def compactedEvents(spark: SparkSession, dir: String,
                       fragFiles: Int = 64,
-                      targetBytes: Long = 4L * 1024 * 1024): String = lock.synchronized {
-    // key folds in the fixture file's (size, mtime) — matching
-    // ZipfCorpus.materialized — so a regenerated events.parquet
-    // re-materializes instead of serving a stale compacted copy
-    val (srcLen, srcMtime) = Materialize.inputStamp(spark, s"$dir/events.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((s"$dir|compacted_events|$fragFiles|$targetBytes|" +
-        s"$srcLen|$srcMtime").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = new File(sys.props("java.io.tmpdir"), "graft_compacted")
-    val frag = new File(root, s"frag_${key}_${Materialize.codeFingerprint.take(8)}")
-    val out = new File(root, s"compact_${key}_${Materialize.codeFingerprint.take(8)}")
-    if (!out.exists()) {
-      if (!frag.exists()) {
-        val staging = new File(frag.getPath + ".staging." +
-          java.lang.ProcessHandle.current().pid())
+                      targetBytes: Long = 4L * 1024 * 1024): String = {
+    val events = Seq(s"$dir/events.parquet")
+    Materialize.stored(spark, s"events_compacted|$fragFiles|$targetBytes", events) { p =>
+      val frag = Materialize.stored(spark, s"events_fragmented|$fragFiles", events) { f =>
         graft.source.Tables.events(spark, dir)
           .withColumn("ts", date_trunc("second", col("ts")))
           .repartition(fragFiles)
-          .write.mode("overwrite").parquet(staging.getAbsolutePath)
-        publishAtomically(staging, frag)
+          .write.parquet(f)
       }
-      compact(spark, frag.getAbsolutePath, out, targetBytes)
+      compact(spark, frag, new File(p), targetBytes)
     }
-    out.getAbsolutePath
   }
 }

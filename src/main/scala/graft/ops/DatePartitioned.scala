@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,47 +21,25 @@ import org.apache.spark.sql.functions._
   * computation; the registered query `dpp_daily_revenue` hash-checks the
   * semantics against DuckDB on the raw (unpartitioned) parquet.
   *
-  * Like [[Bucketed]], the partitioned copy is written once per JVM under
-  * java.io.tmpdir (fixture dirs are read-only) — write-once, prune
+  * The partitioned copy is a [[Materialize]] store — write once, prune
   * forever.
   */
 object DatePartitioned {
-
-  private val lock = new Object
 
   /** Ensure a date-partitioned copy of the events table exists; returns
     * its path. Rows carry the second-truncated `ts` (the registry's
     * determinism contract), an integer `cents`, and the partition column
     * `event_date` derived from `ts` in UTC.
     */
-  def eventsByDate(spark: SparkSession, dir: String): String = lock.synchronized {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|events_by_date".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = new File(
-      new File(sys.props("java.io.tmpdir"), "graft_partitioned"),
-      s"events_by_date_${key}_${Materialize.codeFingerprint.take(8)}")
-    if (!path.exists()) {
-      val staging = new File(path.getPath + ".staging." +
-        java.lang.ProcessHandle.current().pid())
+  def eventsByDate(spark: SparkSession, dir: String): String =
+    Materialize.stored(spark, "events_by_date", Seq(s"$dir/events.parquet")) { p =>
       graft.source.Tables.events(spark, dir)
         .withColumn("ts", date_trunc("second", col("ts")))
         .withColumn("event_date", to_date(col("ts")))
         // one file per (day) directory: the realistic compacted layout
         .repartition(col("event_date"))
-        .write.partitionBy("event_date").mode("overwrite")
-        .parquet(staging.getAbsolutePath)
-      try java.nio.file.Files.move(staging.toPath, path.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException |
-                   _: java.nio.file.FileSystemException =>
-        // lost a cross-process race: discard ours, serve the winner
-        org.apache.commons.io.FileUtils.deleteQuietly(staging)
-        require(path.exists(), s"partitioned-store publish failed: $path")
-      }
+        .write.partitionBy("event_date").parquet(p)
     }
-    path.getAbsolutePath
-  }
 
   /** Per-day purchase revenue in integer cents over the partitioned copy
     * — the dimension-side aggregate both DPP entry points derive their

@@ -722,7 +722,8 @@ object Graph {
 
   /** Community detection by SYNCHRONOUS weighted label propagation over a
     * directed weighted edge list `(src, dst, w)` — symmetrized here, so a
-    * community is dense under co-transition in either direction.
+    * community is dense under co-transition in either direction. Every
+    * aggregated weight must be positive; the query fails otherwise.
     *
     * Classic async LPA is order-dependent; this variant is deterministic
     * by construction (and therefore oracle-checkable): every round each
@@ -743,10 +744,10 @@ object Graph {
       // the zero-weight self-label fold below is only equivalent to the
       // old dangling-node left join while every edge weight is POSITIVE
       // (a w ≤ 0 edge could tie the self-label row and win via the
-      // label-asc tie-break) — enforce the documented precondition
-      // instead of assuming it; for both registered callers (count /
-      // sum-of-count weights ≥ 1) this filter passes every row
-      .filter(col("w") > 0)
+      // label-asc tie-break): fail on a violating edge, checked lazily
+      // inside the checkpoint job below rather than by a separate scan
+      .withColumn("w", when(col("w") > 0, col("w")).otherwise(raise_error(
+        lit("labelPropagation requires every aggregated edge weight w > 0"))))
     val e0 = sym.localCheckpoint()
     // same loop-invariant discipline as pageRank: the node table feeds
     // the dangling-node left join EVERY round — checkpointed once

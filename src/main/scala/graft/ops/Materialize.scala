@@ -5,38 +5,57 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Materialized-intermediate store: compute an expensive deterministic
-  * intermediate ONCE per (inputs, config, code version), persist it as
-  * parquet, and let every later consumer read the stored copy.
+/** Derived-store primitive: compute an expensive deterministic
+  * intermediate ONCE per (inputs, config, code version), persist it on
+  * disk, and let every later consumer read the stored copy. Every derived
+  * store in graft is keyed here — pair graphs, the Zipf corpus, date- and
+  * cell-partitioned layouts, compacted events, IVF/PQ models, bucketed
+  * tables — and all but the last two are built and published by
+  * [[stored]] (the models save themselves through `trainOrLoad`; bucketed
+  * tables are written by their catalog registration).
   *
-  * This is the table-valued generalization of the train-once model stores
-  * (`Ivf.trainOrLoad`, `Pq.trainOrLoad`): a real 100 TB curation pipeline
-  * materializes its near-dup pair graph / dup-group labels once and runs
-  * groups, survivor selection, and graph audits off the stored relation —
-  * re-deriving an O(n·candidates) pair join per consumer would multiply
-  * the most expensive stage of the whole pipeline by the number of
-  * downstream queries. Locally the same reuse serves `graft.Bench` and
-  * `graft.Verify`, which execute each registered query independently.
+  * A real 100 TB curation pipeline materializes its near-dup pair graph /
+  * dup-group labels once and runs groups, survivor selection, and graph
+  * audits off the stored relation — re-deriving an O(n·candidates) pair
+  * join per consumer would multiply the most expensive stage of the whole
+  * pipeline by the number of downstream queries. Locally the same reuse
+  * serves `graft.Bench` and `graft.Verify`, which execute each registered
+  * query independently.
   *
-  * Correctness contract: the builder must be DETERMINISTIC in its inputs
-  * (every registered intermediate here is — the pair pipelines are exact,
-  * ordered, and partition-invariant), and `fingerprintFiles` must cover
-  * every input file the intermediate depends on. The store key hashes
-  * (tag, file lengths, file mtimes, CODE fingerprint): a regenerated
-  * fixture rebuilds instead of serving stale rows, a missing input throws
-  * instead of silently fingerprinting as absent, and any recompile of the
-  * library invalidates the store — so a kernel change can never make
-  * `Verify` validate output of the PREVIOUS kernel. Parquet round-trips
-  * every type used bit-exactly (the `Ivf.save/load` precedent,
-  * spec-pinned there).
+  * The store contract:
+  *  - Key: [[pathFor]] hashes (tag, each input's Hadoop-FS
+  *    (path, length, mtime) stamp, [[codeFingerprint]]). A regenerated
+  *    input rebuilds instead of serving stale rows, a missing input
+  *    throws instead of silently fingerprinting as absent, and any
+  *    recompile of the library invalidates the store — so a kernel change
+  *    can never make `Verify` validate output of the PREVIOUS kernel. The
+  *    tag must name every config knob the store depends on; the inputs
+  *    must cover every file it is derived from. The writer must be
+  *    DETERMINISTIC in (tag, inputs).
+  *  - Completeness: a store directory is complete iff it holds
+  *    `_SUCCESS`; a directory without it is a half-written remnant and is
+  *    rebuilt, never served.
+  *  - Publish: [[stored]] runs the writer into a process-private
+  *    staging directory next to the store, adds `_SUCCESS` if the writer
+  *    did not, and renames it into place with one ATOMIC_MOVE (same
+  *    filesystem by construction), so readers never observe a
+  *    half-written store. Builders in one JVM are serialized by one lock.
+  *  - Race rule: [[publish]] survives exactly one failure, losing
+  *    the rename to another process, in which case the winner's complete
+  *    copy is served and ours discarded. Any other move failure
+  *    (AtomicMoveNotSupportedException when tmpdir straddles filesystems,
+  *    permissions) rethrows — swallowing it returned a path that did not
+  *    exist and surfaced later as a misleading read error (ADVICE r7).
+  *
+  * Parquet round-trips every type used bit-exactly (the `Ivf.save/load`
+  * precedent, spec-pinned there).
   */
 object Materialize {
 
   /** Serializes builders so concurrently-running specs cannot double-build
     * one path; queries in Bench/Verify run sequentially and never wait.
-    * Cross-PROCESS races are handled by the atomic publish in [[cached]].
     */
-  private val lock = new Object
+  private[ops] val lock = new Object
 
   private def md5(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -81,11 +100,14 @@ object Materialize {
   }
 
   /** (length, mtime) stamp of one input path, resolved through Hadoop's
-    * `FileSystem` by the path's own scheme — the shared probe for the
-    * sibling stores (IVF cell layout, PQ model memo, Zipf corpus,
-    * compaction fixtures) that key on fixture files but keep their own
-    * memo layout. Directories stamp their recursive content length.
-    * Throws on an absent input (see [[pathFor]]).
+    * `FileSystem` by the path's OWN scheme (the [[StandingStore]]
+    * rationale): at deployment scale the inputs live on HDFS/S3, where a
+    * `java.io.File` probe would report them absent. A directory input
+    * (multi-file parquet) stamps its recursive content length, so
+    * appending a file changes the stamp even when the directory entry's
+    * own mtime lags. Throws on an absent input: an absent input hashed as
+    * missing would alias with a differently-absent input and serve the
+    * wrong relation.
     */
   def inputStamp(spark: SparkSession, path: String): (Long, Long) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -98,78 +120,59 @@ object Materialize {
     (len, st.getModificationTime)
   }
 
-  /** The store path for (tag, inputs, code version) — exposed for tests.
-    * Throws if any fingerprint input is absent: an absent input silently
-    * hashed as missing would alias with a differently-absent input and
-    * serve the wrong relation.
-    *
-    * Inputs resolve through Hadoop's `FileSystem` by each path's OWN
-    * scheme (the [[StandingStore]] rationale): at deployment scale the
-    * fixture inputs live on HDFS/S3, and a `java.io.File` probe (the
-    * round-11 shape) would report them absent — here that means a THROW
-    * per query instead of a served store, still the wrong behavior
-    * class. A directory input (multi-file parquet) fingerprints its
-    * recursive content length, so appending a file invalidates the key
-    * even when the directory entry's own mtime lags.
+  /** The store path for (tag, inputs, code version); see the key rule
+    * above. Callers whose writer manages its own files (the IVF/PQ
+    * `trainOrLoad` model stores) take the path from here directly.
     */
-  def pathFor(spark: SparkSession, tag: String,
-              fingerprintPaths: Seq[String]): File = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fp = fingerprintPaths.map { s =>
-      val p = new org.apache.hadoop.fs.Path(s)
-      val fs = p.getFileSystem(conf)
-      require(fs.exists(p),
-        s"Materialize fingerprint input does not exist: $s (tag=$tag)")
-      val st = fs.getFileStatus(p)
-      val len = if (st.isDirectory) fs.getContentSummary(p).getLength
-                else st.getLen
-      s"$s|$len|${st.getModificationTime}"
+  def pathFor(spark: SparkSession, tag: String, inputs: Seq[String]): File = {
+    val stamps = inputs.map { s =>
+      val (len, mtime) = inputStamp(spark, s)
+      s"$s|$len|$mtime"
     }
-    new File(storeDir, md5((tag +: codeFingerprint +: fp).mkString("‖")))
+    new File(storeDir, md5((tag +: codeFingerprint +: stamps).mkString("‖")))
   }
 
-  /** Return the materialization of `build`, computing and persisting it on
-    * the first call per (tag, input fingerprint, code fingerprint) and
-    * reading the stored parquet on every later one. `build` is by-name:
-    * cache hits never construct the source plan.
-    *
-    * Publication is atomic: the build writes to a process-private staging
-    * dir, then renames into place (ATOMIC_MOVE — same filesystem by
-    * construction). A concurrent process that loses the race discards its
-    * staging copy and reads the winner's; readers can never observe a
-    * half-written store.
+  private def rm(f: File): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(f)
+
+  /** Return the path of the store for (tag, inputs, code version),
+    * running `write(stagingPath)` to build it on the first call and
+    * serving the published copy on every later one.
     */
-  def cached(spark: SparkSession, tag: String, fingerprintPaths: Seq[String])
-            (build: => DataFrame): DataFrame = {
-    val path = pathFor(spark, tag, fingerprintPaths)
+  def stored(spark: SparkSession, tag: String, inputs: Seq[String])
+            (write: String => Unit): String = {
+    val path = pathFor(spark, tag, inputs)
     def complete = new File(path, "_SUCCESS").exists()
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).iterator.flatten.foreach(rm); f.delete()
-    }
     if (!complete) lock.synchronized {
       if (!complete) {
-        // a store dir without _SUCCESS is a half-written remnant (only
-        // possible from pre-atomic layouts or partial deletion — the
-        // rename below never exposes one): rebuild, never serve it
-        if (path.exists()) rm(path)
+        rm(path)
         val staging = new File(path.getParentFile,
           s"${path.getName}.staging-${ProcessHandle.current().pid()}")
-        build.write.mode("overwrite").parquet(staging.getAbsolutePath)
-        try
-          Files.move(staging.toPath, path.toPath, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.AccessDeniedException |
-               _: java.nio.file.DirectoryNotEmptyException =>
-            if (complete) rm(staging) // lost the race — serve the winner's
-            else { // pathological: racer left an incomplete dir behind
-              rm(path)
-              Files.move(staging.toPath, path.toPath,
-                StandardCopyOption.ATOMIC_MOVE)
-            }
-        }
+        rm(staging)
+        write(staging.getAbsolutePath)
+        new File(staging, "_SUCCESS").createNewFile()
+        publish(staging, path)
       }
     }
-    spark.read.parquet(path.getAbsolutePath)
+    path.getAbsolutePath
   }
+
+  /** Atomically rename a staged directory to `out`, under the race rule
+    * above: a lost race (a complete `out` now exists) serves the winner's
+    * copy; every other move failure rethrows.
+    */
+  private[graft] def publish(staging: File, out: File): Unit =
+    try Files.move(staging.toPath, out.toPath, StandardCopyOption.ATOMIC_MOVE)
+    catch {
+      case e: java.nio.file.FileSystemException =>
+        rm(staging)
+        if (!new File(out, "_SUCCESS").exists()) throw e
+    }
+
+  /** The store as a DataFrame: `build` written as parquet by [[stored]].
+    * `build` is by-name: cache hits never construct the source plan.
+    */
+  def cached(spark: SparkSession, tag: String, inputs: Seq[String])
+            (build: => DataFrame): DataFrame =
+    spark.read.parquet(stored(spark, tag, inputs)(p => build.write.parquet(p)))
 }

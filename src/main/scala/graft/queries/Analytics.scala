@@ -843,8 +843,8 @@ object Analytics {
     // Small-file compaction round-trip: the events table is first
     // fragmented into 64 files (the streaming-sink shape — one file per
     // trigger × partition), compacted back to ~4 MB files
-    // (ops.Compact: ⌈bytes/target⌉ round-robin rewrite, staging +
-    // atomic publish), and THEN aggregated. The oracle computes the
+    // (ops.Compact: ⌈bytes/target⌉ round-robin rewrite), and THEN
+    // aggregated. The oracle computes the
     // same aggregate on the RAW table — hash-equality proves the
     // maintenance pass changes layout, never content. File-count and
     // byte accounting are CompactSpec's job.
@@ -1176,8 +1176,8 @@ object Analytics {
            FROM events)
          WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""") { (s, dir) =>
       val ev = Tables.events(s, dir)
-      val stateTable = graft.ops.Bucketed.ensure(s, dir, "cdc_state_user",
-        "user_id", nBuckets = 8)(
+      val stateTable = graft.ops.Bucketed.ensure(s, "cdc_state_user",
+        "user_id", nBuckets = 8, Seq(s"$dir/events.parquet"))(
         graft.ops.Cdc.compactedLog(ev.filter(col("event_id") % 3 =!= 0),
           keys = Seq("user_id"), ordering = Seq("ts", "event_id")))
       graft.ops.Cdc.mergeCompactedStationary(s.table(stateTable),

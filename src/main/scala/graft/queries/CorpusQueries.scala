@@ -17,31 +17,20 @@ object CorpusQueries {
   /** Train-once IVF model per (fixture dir, config): the registered IVF
     * queries share one persisted centroid set instead of each re-scanning
     * the corpus `iters` times — the shape a real pipeline has (train
-    * once, query for days). The path fingerprints the fixture file's
-    * (size, mtime) so a regenerated corpus retrains instead of serving a
-    * stale model; the store lives under java.io.tmpdir (fixture dirs are
-    * read-only).
+    * once, query for days). Stored at its [[graft.ops.Materialize]] key.
     */
   private def ivfModel(s: org.apache.spark.sql.SparkSession, dir: String,
-                       nCentroids: Int, dim: Int, iters: Int): graft.sim.Ivf.IvfModel = {
-    val (fLen, fMtime) = graft.ops.Materialize.inputStamp(s, s"$dir/embeddings.parquet")
-    val tag = s"$dir|$fLen|$fMtime|$nCentroids|$dim|$iters"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_ivf_models"),
-      key).getAbsolutePath
-    graft.sim.Ivf.trainOrLoad(Tables(s, dir, "embeddings"),
-      nCentroids, dim, iters, path)
-  }
+                       nCentroids: Int, dim: Int, iters: Int): graft.sim.Ivf.IvfModel =
+    graft.sim.Ivf.trainOrLoad(Tables(s, dir, "embeddings"), nCentroids, dim, iters,
+      graft.ops.Materialize.pathFor(s, s"ivf_model|$nCentroids|$dim|$iters",
+        Seq(s"$dir/embeddings.parquet")).getAbsolutePath)
 
   /** Built-then-SPLIT cell store behind `ann_cell_split`: a PRIVATE cell
     * layout of the embeddings table under the seed-16 model (the shared
     * [[graft.sim.IvfStore.cellPartitioned]] store must never be mutated
     * — other queries read it), with the fullest cell split by the real
     * [[graft.sim.IvfStore.splitCell]] physical operator during the
-    * build. Memoized per (fixture, code version) like every derived
-    * store; returns (store path, the split cell id). The cell census is
+    * build. Returns (store path, the split cell id). The cell census is
     * one fused assignment scan collecting k rows — the bounded class.
     */
   private def splitCellStore(s: org.apache.spark.sql.SparkSession, dir: String,
@@ -51,44 +40,21 @@ object CorpusQueries {
       .groupBy(col("cluster")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
       .sortBy { case (c, n) => (-n, c) }.head._1
-    val (len, mtime) = graft.ops.Materialize.inputStamp(s, s"$dir/embeddings.parquet")
-    val tag = s"$dir|ivf_cells_split|seed16|$cell|$len|$mtime"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val path = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_partitioned"),
-      s"ivf_split_${key}_${graft.ops.Materialize.codeFingerprint.take(8)}")
-    if (!path.exists()) {
-      val staging = new java.io.File(path.getPath + ".staging." +
-        java.lang.ProcessHandle.current().pid())
-      graft.sim.IvfStore.writeCells(emb, model, staging.getAbsolutePath,
-        "overwrite")
-      graft.sim.IvfStore.splitCell(s, staging.getAbsolutePath, model, cell)
-      try java.nio.file.Files.move(staging.toPath, path.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException |
-                   _: java.nio.file.FileSystemException =>
-        org.apache.commons.io.FileUtils.deleteQuietly(staging)
-        require(path.exists(), s"split-store publish failed: $path")
-      }
+    val path = graft.ops.Materialize.stored(s, s"ivf_cells_split|seed16|$cell",
+        Seq(s"$dir/embeddings.parquet")) { p =>
+      graft.sim.IvfStore.writeCells(emb, model, p, "overwrite")
+      graft.sim.IvfStore.splitCell(s, p, model, cell)
     }
-    (path.getAbsolutePath, cell)
+    (path, cell)
   }
 
   /** Persisted-PQ-model counterpart of [[ivfModel]]: one train per
     * (fixture, config), reused by every consumer in the session. */
   private def pqModel(s: org.apache.spark.sql.SparkSession, dir: String,
-                      m: Int, ksub: Int, dim: Int, iters: Int): graft.sim.Pq.PqModel = {
-    val (fLen, fMtime) = graft.ops.Materialize.inputStamp(s, s"$dir/embeddings.parquet")
-    val tag = s"pq|$dir|$fLen|$fMtime|$m|$ksub|$dim|$iters"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_pq_models"),
-      key).getAbsolutePath
-    graft.sim.Pq.trainOrLoad(Tables(s, dir, "embeddings"),
-      m, ksub, dim, iters, path)
-  }
+                      m: Int, ksub: Int, dim: Int, iters: Int): graft.sim.Pq.PqModel =
+    graft.sim.Pq.trainOrLoad(Tables(s, dir, "embeddings"), m, ksub, dim, iters,
+      graft.ops.Materialize.pathFor(s, s"pq_model|$m|$ksub|$dim|$iters",
+        Seq(s"$dir/embeddings.parquet")).getAbsolutePath)
 
   /** DuckDB oracle for `doc_bpe_merges`: the pure one-merge-per-round
     * BPE recurrence (Sennrich et al. 2016), unrolled into one CTE block
@@ -174,9 +140,7 @@ object CorpusQueries {
     * pair graph once per corpus snapshot; [[graft.ops.Materialize]] gives
     * Bench/Verify the same once-per-fixture cost. The pair pipeline is
     * deterministic and partition-invariant (DedupSpec), so the stored
-    * relation is row-identical to a fresh derivation; the store key folds
-    * in the library's code fingerprint, so a kernel change rebuilds and
-    * Verify can never validate the previous kernel's output.
+    * relation is row-identical to a fresh derivation.
     */
   private def jaccardPairGraph(s: org.apache.spark.sql.SparkSession,
                                dir: String): org.apache.spark.sql.DataFrame =
@@ -189,8 +153,7 @@ object CorpusQueries {
   /** Materialized CROSS-SOURCE near-dup pair graph: lang-only blocking,
     * so pairs REACH ACROSS sources — the relation source-attribution
     * reporting needs (the within-source graph above can only ever see
-    * the diagonal). Same determinism/fingerprint contract as
-    * [[jaccardPairGraph]]; bigger blocks (|lang| instead of
+    * the diagonal). Bigger blocks (|lang| instead of
     * |lang × source|), same lossless PPJoin prefix filter.
     */
   private def crossSourcePairGraph(s: org.apache.spark.sql.SparkSession,
@@ -203,9 +166,8 @@ object CorpusQueries {
 
   /** Materialized Zipf-corpus near-dup pair graph — shared by
     * `doc_jaccard_pairs_zipf` (emits it) and `doc_dup_triangles_zipf`
-    * (audits it), the realistic-corpus twins of the pair above. Same
-    * determinism/fingerprint contract as [[jaccardPairGraph]]; the
-    * corpus itself is already memoized by `ZipfCorpus.materialized`.
+    * (audits it), the realistic-corpus twins of the pair above; the
+    * corpus itself is already stored by `ZipfCorpus.materialized`.
     */
   private def zipfPairGraph(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =

@@ -81,4 +81,30 @@ class MaterializeSpec extends SparkSpec {
     }
     assert(served.select("v").as[String].collect().toSeq == Seq("fresh"))
   }
+
+  test("stored marks a writer's output complete and serves it afterwards") {
+    val in = tmpInput()
+    val tag = s"spec|stored|${in.getName}"
+    val path = Materialize.stored(spark, tag, Seq(in.getPath)) { p =>
+      Files.createDirectories(new File(p).toPath)
+      Files.write(new File(p, "model.txt").toPath, "m".getBytes("UTF-8"))
+    }
+    assert(new File(path, "_SUCCESS").exists())
+    assert(Materialize.stored(spark, tag, Seq(in.getPath))(_ =>
+      fail("writer must not run when a complete store exists")) == path)
+  }
+
+  test("publish serves a lost race's winner and rethrows any other move failure") {
+    def dirWith(files: String*): File = {
+      val d = Files.createTempDirectory("mat_pub").toFile
+      files.foreach(new File(d, _).createNewFile())
+      d
+    }
+    val lost = dirWith("part-0")
+    Materialize.publish(lost, dirWith("_SUCCESS", "part-0"))
+    assert(!lost.exists(), "the losing staging copy is discarded")
+    // a non-empty target that is not a complete store is no lost race
+    intercept[java.nio.file.FileSystemException](
+      Materialize.publish(dirWith("part-0"), dirWith("other")))
+  }
 }

@@ -109,4 +109,12 @@ class AnomalySpec extends SparkSpec {
       assert(sEv == bEv)
     } finally q.stop()
   }
+
+  test("an input column named __v2 is rejected instead of overwritten") {
+    val vals = (0L until 12L).map(m => ("a", m, 10L))
+    val e = intercept[IllegalArgumentException](
+      flagged(series(vals: _*).withColumnRenamed("cnt", "__v2")
+        .withColumn("cnt", org.apache.spark.sql.functions.col("__v2"))))
+    assert(e.getMessage.contains("__v2"))
+  }
 }

@@ -83,4 +83,16 @@ class BucketingSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
   }
+
+  test("ops.Bucketed: a changed input maps to a fresh bucketed table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed-stale")
+    for (t <- Seq("orders", "lineitem"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, s"$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    val (o1, _) = Bucketed.ordersLineitem(spark, dir.toString)
+    val orders = dir.resolve("orders.parquet").toFile
+    assert(orders.setLastModified(orders.lastModified() + 73000))
+    val (o2, _) = Bucketed.ordersLineitem(spark, dir.toString)
+    assert(o1 != o2, "a regenerated orders file must not serve the old table")
+  }
 }

@@ -51,4 +51,14 @@ class CompactSpec extends SparkSpec {
     assert(fingerprint(p1).getLong(0) ==
       graft.source.Tables.events(spark, sfDir).count())
   }
+
+  test("compactedEvents: a changed events input maps to a fresh store") {
+    val dir = Files.createTempDirectory("graft-compact-stale")
+    val events = dir.resolve("events.parquet")
+    Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"), events)
+    val p1 = Compact.compactedEvents(spark, dir.toString, fragFiles = 4, targetBytes = 1L << 20)
+    assert(events.toFile.setLastModified(events.toFile.lastModified() + 73000))
+    val p2 = Compact.compactedEvents(spark, dir.toString, fragFiles = 4, targetBytes = 1L << 20)
+    assert(p1 != p2)
+  }
 }

@@ -111,4 +111,16 @@ class DppSpec extends SparkSpec {
     assert(read.contains(1L),
       s"dynamic pruning should read exactly the whale-day partition, read=$read")
   } }
+
+  test("a changed events input maps to a fresh partitioned store") {
+    val dir = Files.createTempDirectory("graft-dpp-stale")
+    val events = dir.resolve("events.parquet")
+    Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"), events)
+    val first = DatePartitioned.eventsByDate(spark, dir.toString)
+    assert(events.toFile.setLastModified(events.toFile.lastModified() + 73000))
+    val second = DatePartitioned.eventsByDate(spark, dir.toString)
+    assert(first != second, "a regenerated events file must not serve the old store")
+    assert(spark.read.parquet(second).count() ==
+      graft.source.Tables.events(spark, sfDir).count())
+  }
 }

@@ -384,4 +384,11 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(base == shuffled)
   }
+
+  test("labelPropagation: a zero aggregated edge weight fails, naming the precondition") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 3L), (2L, 3L, 0L)).toDF("src", "dst", "w")
+    val e = intercept[Exception](Graph.labelPropagation(edges, 2).collect())
+    assert(e.getMessage.contains("edge weight w > 0"), e.getMessage)
+  }
 }
