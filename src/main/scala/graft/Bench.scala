@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Driver benchmark: every registered query at SPARK_GRAFT_SF_DIR.
+/** Benchmark: every registered query at SPARK_GRAFT_SF_DIR, or
+  * only the queries named as arguments (same protocol and artifact;
+  * an unregistered name fails the run before anything executes).
   *
   * Variance-proof protocol (round 5):
   *   - the suite runs SPARK_GRAFT_BENCH_REPS times (default 3) after a
@@ -40,6 +42,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val only = SparkEntry.registered(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -116,6 +119,7 @@ object Bench {
     materialize("top_customers")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.isEmpty || only(n))
     case class Rep(idx: Int, loadBefore: String, loadAfter: String,
                    secs: Map[String, Double], total: Double)
     val repRuns = (1 to reps).map { i =>

@@ -23,6 +23,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
+  /** The names a run is restricted to (empty: no restriction). Fails
+    * naming every unregistered one, before any query runs — a typo must
+    * not turn into an empty run. */
+  def registered(names: Seq[String]): Set[String] = {
+    val unknown = names.filterNot(queries.keySet)
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+    names.toSet
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -9,7 +9,7 @@ object Verify {
     val outDir = args(1)
     // optional extra args: run only these queries (local iteration aid;
     // the driver always calls with exactly <sfDir> <outDir>)
-    val only = args.drop(2).toSet
+    val only = SparkEntry.registered(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

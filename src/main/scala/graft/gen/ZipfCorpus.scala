@@ -10,8 +10,9 @@ import graft.source.Tables
   * only the id universe, so the corpus exists wherever the fixtures do).
   *
   * Why it exists: the fixture documents' 31-token vocabulary is the
-  * adversarial DENSE case for token-bucket candidate generation — every
-  * round's PairStats on it measures the worst case, not the realistic one.
+  * adversarial DENSE case for token-bucket candidate generation — the
+  * candidate volumes measured on it (SCALE.md) are the worst case, not
+  * the realistic one.
   * This corpus has the realistic shape: token frequency ∝ 1/rank over a
   * ~2047-word vocabulary, so `doc_jaccard_pairs_zipf` re-proves the
   * non-degenerate candidate volume under the driver's oracle check every

@@ -42,8 +42,8 @@ object DatePartitioned {
     }
 
   /** Per-day purchase revenue in integer cents over the partitioned copy
-    * — the dimension-side aggregate both DPP entry points derive their
-    * qualifying-day set from.
+    * — the dimension-side aggregate the qualifying-day set is derived
+    * from.
     */
   private def dailyPurchaseCents(fact: DataFrame): DataFrame =
     fact.where(col("event_type") === "purchase" && col("value").isNotNull)
@@ -64,16 +64,6 @@ object DatePartitioned {
       .select(col("event_date").cast("string").as("event_date"),
         col("purchase_cents"), col("n_events"), col("total_cents"))
       .orderBy(col("event_date"))
-
-  /** Qualifying days by explicit threshold — the spec's entry point (a
-    * planted fixture makes the pruning fraction sharp and assertable).
-    */
-  def dailyRevenueForBigDays(spark: SparkSession, dir: String,
-                             minDailyCents: Long): DataFrame = {
-    val fact = spark.read.parquet(eventsByDate(spark, dir))
-    joinOnBigDays(fact,
-      dailyPurchaseCents(fact).where(col("purchase_cents") >= minDailyCents))
-  }
 
   /** Qualifying days by a RUNTIME threshold (strictly above the average
     * daily purchase revenue) — the registered query's entry point: no

@@ -1440,7 +1440,7 @@ object CorpusQueries {
     // The containment audit on the REALISTIC corpus — completing the
     // Zipf twin pattern (jaccard and triangles have theirs) and
     // measuring the OPPOSITE regime: the fixture run is output-bound
-    // (PairStats at sf1: 19.7M candidates → 10.8M true results, 1.8
+    // (sf1, SCALE.md: 19.7M candidates → 10.8M true results, 1.8
     // per result) where the Zipf run was CANDIDATE-bound — the probe
     // prefix is only the (1−t)·|A|+1 ≈ 4–8 rarest tokens of each
     // document, and "rarest within a 30–70-token doc" drawn from a
@@ -1450,7 +1450,7 @@ object CorpusQueries {
     // witness bound, lossless) plus positional container-index
     // truncation cut that to 1.06M candidates (16.3 per result,
     // 21.7× fewer; 25.8 → 12.4 s at sf1) — see
-    // Dedup.containmentCandidates. The twin keeps the regime measured
+    // Dedup.containmentCandidatesAB. The twin keeps the regime measured
     // honestly under an oracle every round. Unblocked (the Zipf
     // corpus carries no lang/source).
     Q("doc_containment_pairs_zipf",

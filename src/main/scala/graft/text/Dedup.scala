@@ -361,26 +361,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Candidate (a_id, b_id) multiset for [[minhashPairs]] — the band
-    * bucket self-join, exposed for candidate-volume/spread measurement.
-    * IDs only: shuffling shingle arrays through every band collision
-    * would multiply payload bytes by the collision count.
-    */
-  private[text] def minhashCandidates(docs: DataFrame, numHashes: Int,
-                                      bands: Int, shingleW: Int,
-                                      textCol: String, idCol: String,
-                                      hotBucketCap: Int): DataFrame = {
-    val rows = numHashes / bands
-    val buckets = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleW).as("sh"))
-      .select(col("id"), minhashSignature(col("sh"), numHashes).as("sig"))
-      .select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows)))))
-          .as("bh"))
-    bucketSelfJoin(buckets, hotBucketCap)
-  }
-
   /** Grid-salted self-join of a bucket index `(id, bh)` → candidate
     * `(a_id, b_id)` multiset (a_id < b_id) of rows sharing a bucket.
     * `bh` may be any equatable type (long band hashes, string band
@@ -1186,7 +1166,7 @@ object Dedup {
     val sigB = if (exactMask.isDefined) Seq("b_sig") else Seq.empty[String]
     // Both sides are corpus-proportional exploded indexes whose byte
     // estimate descends from one compact parquet scan — never let the
-    // planner broadcast one (see containmentCandidates, where the same
+    // planner broadcast one (see containmentCandidatesAB, where the same
     // mis-estimate built a 4.8 GiB relation at sf1). Above the volume
     // gate the join inputs are pre-partitioned on the join keys so each
     // shuffled-hash build map fits (candJoinParts — SHJ does not spill).
@@ -1728,22 +1708,6 @@ object Dedup {
     }
   }
 
-  /** Candidate (a_id, b_id) generation for [[containmentPairs]] — exposed
-    * for candidate-volume measurement (PairStats). With `exactMask`
-    * (the ≤64-token bounded-dictionary regime) the signature carried on
-    * every index row IS the exact vocab-rank bitset, the bloom witness
-    * bound becomes the exact threshold test, and the output is the
-    * SCORED pre-dedup stream `(a_id, b_id, containment)` — no verify
-    * join-back needed. Without it: the distinct `(a_id, b_id)` pair
-    * set, as before.
-    */
-  private[text] def containmentCandidates(d: DataFrame, blockCols: Seq[String],
-                                          threshold: Double, commonVocab: Int,
-                                          hotBucketCap: Int,
-                                          exactMask: Option[Column] = None): DataFrame =
-    containmentCandidatesAB(d, d, tokenRanks(d, commonVocab), blockCols,
-      threshold, hotBucketCap, exactMask)
-
   /** The bounded-dictionary exact-mask expression, derived from an
     * ALREADY-collected rank dictionary — no extra corpus job: `ranks`
     * holds the COMPLETE vocabulary exactly when it was not truncated at
@@ -1765,7 +1729,7 @@ object Dedup {
 
   /** Two-sided candidate core: CONTAINED side `dA` (canonical prefixes
     * probe), CONTAINER side `dB` (full positionally-truncated token
-    * index). The self case `dA = dB` is [[containmentCandidates]]; the
+    * index). The self case `dA = dB` is [[containmentPairs]]'s; the
     * incremental case probes a batch against the standing corpus (and
     * vice versa) without ever regenerating old×old candidates. `ranks`
     * must be ONE shared frequency order for both sides — the prefix

@@ -41,10 +41,6 @@ object Text {
     (length(text) - length(regexp_replace(text, "[0-9]", ""))) /
       greatest(length(text), lit(1))
 
-  def meanTokenLen(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, w) => acc + length(w)).cast("double") /
-      tokenCount(text)
-
   /** Composite quality score in [0,1]: penalizes extreme lengths, low
     * lexical diversity, and punctuation/digit noise. Weights are heuristic;
     * the point is a cheap, fully-vectorized scorer.
@@ -803,7 +799,14 @@ object Text {
     * concatenation, and symbol identity is string identity.
     */
   def bpeMerges(docs: org.apache.spark.sql.DataFrame,
-                nMerges: Int): org.apache.spark.sql.DataFrame = {
+                nMerges: Int): org.apache.spark.sql.DataFrame =
+    bpeMerges(docs, nMerges, localCap = 1 << 18)
+
+  /** [[bpeMerges]] with the driver-local vocabulary bound as a
+    * parameter, so a small corpus can force the distributed loop. */
+  private[text] def bpeMerges(docs: org.apache.spark.sql.DataFrame,
+                              nMerges: Int,
+                              localCap: Int): org.apache.spark.sql.DataFrame = {
     require(nMerges >= 1, "nMerges must be >= 1")
     val spark = docs.sparkSession
     val words0 = docs.select(explode(tokens(col("text"))).as("w"))
@@ -817,18 +820,17 @@ object Text {
     // BOUNDED-VOCAB fast path (round-16, guide §1.2/§5): the ENTIRE
     // iteration state is the distinct-word frequency table — the corpus
     // is never touched again after the one aggregation above. When that
-    // table fits the driver comfortably (≤ 2¹⁸ distinct words ≈ tens of
-    // MB — the tokenRanks/IVF-centroid bounded-collect class; one
-    // LIMIT cap+1 job proves the bound BEFORE collecting), the merge
+    // table fits the driver comfortably (≤ localCap distinct words; 2¹⁸
+    // ≈ tens of MB — the tokenRanks/IVF-centroid bounded-collect class;
+    // one LIMIT cap+1 job proves the bound BEFORE collecting), the merge
     // recurrence runs locally: ONE Spark job total instead of two jobs
     // plus two driver barriers per merge round (measured 36 jobs /
     // 3.6 s → 3 jobs for the registered 20-merge queries, whose wall
     // was >2/3 job-launch latency). Vocabularies beyond the cap keep
     // the distributed loop — the 100 TB contract is unchanged.
-    val cap = 1 << 18
-    val head = words0.limit(cap + 1).collect()
+    val head = words0.limit(localCap + 1).collect()
     val merges: Seq[(Int, String, String, Long)] =
-      if (head.length <= cap)
+      if (head.length <= localCap)
         bpeMergesLocal(
           head.map(r => (r.getSeq[String](0).toArray, r.getLong(1))), nMerges)
       else bpeMergesDistributed(words0, nMerges)

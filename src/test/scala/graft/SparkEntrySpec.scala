@@ -14,6 +14,15 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("a query-name filter names every unregistered query and keeps known ones") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registered(Seq("q1_pricing_summary", "q1_pricing_sumary", "nope")))
+    assert(e.getMessage.contains("unknown query: q1_pricing_sumary, nope"))
+    assert(SparkEntry.registered(Seq("q1_pricing_summary", "emb_norms")) ==
+      Set("q1_pricing_summary", "emb_norms"))
+    assert(SparkEntry.registered(Nil).isEmpty)
+  }
+
   test("driver smoke contract: entry() returns rows on the smallest fixture") {
     assert(!SparkEntry.entry(TestSpark.spark).isEmpty)
   }

@@ -1,6 +1,11 @@
 package graft.text
 
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 
@@ -409,16 +414,32 @@ class TextSpec extends SparkSpec {
   }
 
   test("bpeMerges matches the exact sequential reference, merge by merge") {
-    import spark.implicits._
     val texts = Seq(
       "low low low low low", "lower lower", "newest newest newest newest newest newest",
       "widest widest widest", "low lower newest")
-    val got = Text.bpeMerges(texts.toDF("text"), nMerges = 12)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     val want = referenceBpe(texts, 12)
-    assert(got == want, s"\ngot  $got\nwant $want")
-    // sanity: the classic corpus learns multi-char units
-    assert(got.exists { case (_, a, b, _) => (a + b).length >= 3 })
+    val vocab = texts.flatMap(_.split("\\s+")).distinct.size
+    // the default cap holds this vocabulary (driver-local loop); a cap
+    // below it forces the distributed loop
+    for (cap <- Seq(None, Some(vocab - 1))) {
+      // a fresh session reports only its own queries to its listeners
+      val s = spark.newSession()
+      import s.implicits._
+      val ranked = new java.util.concurrent.atomic.AtomicInteger
+      s.listenerManager.register(new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.optimizedPlan.exists(_.isInstanceOf[Sort])) ranked.incrementAndGet()
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
+      val df = texts.toDF("text")
+      val got = cap.fold(Text.bpeMerges(df, nMerges = 12))(Text.bpeMerges(df, 12, _))
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+      assert(got == want, s"cap $cap\ngot  $got\nwant $want")
+      // sanity: the classic corpus learns multi-char units
+      assert(got.exists { case (_, a, b, _) => (a + b).length >= 3 })
+      // only the distributed loop ranks pair counts in a Spark sort
+      if (cap.nonEmpty) eventually(timeout(30.seconds)) { assert(ranked.get > 0) }
+    }
   }
 
   test("bpeMerges batching survives tie-heavy and conflict-heavy corpora") {
